@@ -42,52 +42,51 @@ object Quality {
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  /** Exact per-group median over a value HISTOGRAM (`grp` columns, `v`
-    * long, `cnt` long) — the scale-safe replacement for `percentile(v,
-    * 0.5)`, whose ObjectHashAggregate buffers every ROW of a group in
-    * one task (the r2 perf-weak QC finding; at 100 TB that is billions
-    * of values in one buffer). Here the group is first collapsed to one
-    * row per distinct VALUE (map-side combined), and the middle rank(s)
-    * are located with a cumulative count over the histogram. The
-    * per-group window sees only distinct values — for QC quantities
-    * (track lengths, per-frame counts) that is bounded by the value
-    * domain, not the row count. Median = mean of the lower/upper middle
-    * ranks, exactly as `percentile`/DuckDB `median` define it. */
-  def histogramMedian(hist: DataFrame, grp: Seq[String]): DataFrame = {
+  /** Per-group `n`, `min`, exact `median` and `max` of a value HISTOGRAM
+    * (`grp` columns, `v` long, `cnt` long) — the scale-safe replacement
+    * for `percentile(v, 0.5)`, whose ObjectHashAggregate buffers every
+    * ROW of a group in one task (the r2 perf-weak QC finding). The
+    * group arrives collapsed to one row per distinct VALUE, so the
+    * per-group window sees only distinct values — bounded, for QC
+    * quantities (track lengths, per-frame counts), by the value domain,
+    * not the row count. One window pass (`PARTITION BY grp ORDER BY v`)
+    * yields the running count and the group total; one aggregate on
+    * the window's own `grp` partitioning (no new exchange, no join)
+    * takes n/min/max and the value(s) whose cumulative count covers the
+    * middle rank(s). Median = mean of the lower/upper middle ranks,
+    * exactly as `percentile`/DuckDB `median` define it. */
+  def histogramSummary(hist: DataFrame, grp: Seq[String]): DataFrame = {
     val gcols = grp.map(col)
     val w = Window.partitionBy(gcols: _*).orderBy(col("v"))
-    val tot = hist.groupBy(gcols: _*).agg(sum(col("cnt")).as("_n"))
     val ranked = hist
       .withColumn("_cum", sum(col("cnt")).over(w))
-      .withColumn("_prev", col("_cum") - col("cnt"))
-      .join(tot, grp)
-      // Spark's `/` on longs yields double — floor back to integer ranks
-      .withColumn("_r1", floor((col("_n") + 1) / 2).cast("long")) // lower middle (1-based)
-      .withColumn("_r2", floor(col("_n") / 2).cast("long") + 1)   // upper middle
-    def covers(r: Column) = col("_prev") < r && r <= col("_cum")
-    ranked.filter(covers(col("_r1")) || covers(col("_r2")))
-      .groupBy(gcols: _*)
-      .agg(((max(when(covers(col("_r1")), col("v"))) +
-        max(when(covers(col("_r2")), col("v")))).cast("double") / 2.0).as("median"))
+      // same partitioning and order as `_cum`, so Spark plans one Window
+      .withColumn("_n", sum(col("cnt")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    val prev = col("_cum") - col("cnt")
+    def covers(r: Column) = prev < r && r <= col("_cum")
+    // Spark's `/` on longs yields double — floor back to integer ranks
+    val r1 = floor((col("_n") + 1) / 2).cast("long") // lower middle (1-based)
+    val r2 = floor(col("_n") / 2).cast("long") + 1   // upper middle
+    ranked.groupBy(gcols: _*)
+      .agg(max(col("_n")).as("n"), min(col("v")).as("min"),
+        ((max(when(covers(r1), col("v"))) +
+          max(when(covers(r2), col("v")))).cast("double") / 2.0).as("median"),
+        max(col("v")).as("max"))
   }
 
   /** Cells-per-frame distribution (reference: segmentation_qc.qmd —
     * "cell counts per frame" table: n frames, min/median/max of the
-    * per-frame count). Median over INTEGER counts is cross-engine exact
-    * ((a+b)/2 of integers has no rounding ambiguity) and computed from
-    * the count histogram — no per-group full-value buffer. */
+    * per-frame count). Per-frame counts → their histogram →
+    * [[histogramSummary]]. Median over INTEGER counts is cross-engine
+    * exact ((a+b)/2 of integers has no rounding ambiguity). */
   def cellsPerFrame(df: DataFrame, group: Column, frame: Column): DataFrame = {
     val hist = df.groupBy(group.as("grp"), frame.as("frame"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("grp"), col("n").as("v"))
       .agg(count(lit(1)).as("cnt"))
-    val stats = hist.groupBy(col("grp"))
-      .agg(sum(col("cnt")).as("n_frames"),
-        min(col("v")).as("min_n"),
-        max(col("v")).as("max_n"))
-    stats.join(histogramMedian(hist, Seq("grp")), Seq("grp"))
-      .select(col("grp"), col("n_frames"), col("min_n"),
-        col("median").as("median_n"), col("max_n"))
+    histogramSummary(hist, Seq("grp"))
+      .toDF("grp", "n_frames", "min_n", "median_n", "max_n")
   }
 
   /** Grouped descriptive stats (reference: segmentation_qc.qmd area
@@ -118,8 +117,9 @@ object Quality {
   /** Track-length distribution before vs after QC filtering
     * (reference: tracking_qc.qmd:43-65 — the raw/filtered histogram's
     * summary table: per filter state, number of tracks and
-    * min/median/max track length). One union + two-level aggregate;
-    * median over INTEGER lengths is cross-engine exact. */
+    * min/median/max track length). Per-track lengths of both states in
+    * one union → their histogram → [[histogramSummary]]; median over
+    * INTEGER lengths is cross-engine exact. */
   def trackLengthHistogram(raw: DataFrame, filtered: DataFrame,
                            entity: String): DataFrame = {
     def lengths(df: DataFrame, state: String) =
@@ -128,13 +128,8 @@ object Quality {
     val hist = lengths(raw, "raw").union(lengths(filtered, "filtered"))
       .groupBy(col("filter_state"), col("len").as("v"))
       .agg(count(lit(1)).as("cnt"))
-    val stats = hist.groupBy(col("filter_state"))
-      .agg(sum(col("cnt")).as("n_tracks"),
-        min(col("v")).as("min_len"),
-        max(col("v")).as("max_len"))
-    stats.join(histogramMedian(hist, Seq("filter_state")), Seq("filter_state"))
-      .select(col("filter_state"), col("n_tracks"), col("min_len"),
-        col("median").as("median_len"), col("max_len"))
+    histogramSummary(hist, Seq("filter_state"))
+      .toDF("filter_state", "n_tracks", "min_len", "median_len", "max_len")
   }
 
   /** Frame-to-frame step-distance distribution (reference:

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * hash as every graft sampler, so the draw is uniform, engine- and
   * partitioning-independent, and reproducible bit-for-bit.
   *
-  * Scale shape — the [[graft.operators.Quality.histogramMedian]] idea
+  * Scale shape — the [[graft.operators.Quality.histogramSummary]] idea
   * generalized to rank k: a naive `row_number() OVER (PARTITION BY
   * grp ORDER BY key)` sorts every group in full (billions of rows per
   * domain at 100 TB). Here the uniform key space is cut into 4096

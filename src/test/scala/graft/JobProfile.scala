@@ -3,18 +3,20 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc job-launch profiler for the q_icorpus increment path: runs
-  * the registry query against a scale dir and prints every Spark job
-  * with its wall-clock span, so sequential-launch overhead is
-  * measurable (the r16 splice-fusion work). Test-scope tool, not
-  * product surface. */
+/** Ad-hoc job-launch profiler (default: the q_icorpus increment path):
+  * runs a registry query against a scale dir at local[$SPARK_GRAFT_CPUS]
+  * (default 4, as Verify) and prints every Spark job with its
+  * wall-clock span, so sequential-launch overhead is measurable (the
+  * r16 splice-fusion work). Test-scope tool, not product surface.
+  * Run: `sbt "Test/runMain graft.JobProfile <sf dir> <query>"`. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val q = if (args.length > 1) args(1) else "q_icorpus"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(Tables.NanosConf._1, Tables.NanosConf._2)

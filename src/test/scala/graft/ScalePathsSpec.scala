@@ -155,25 +155,40 @@ class QcMedianSpec extends SparkSpec {
   import spark.implicits._
   import graft.operators.Quality
 
-  test("histogramMedian: exact median for odd and even group sizes") {
-    // grp a: values 1,2,2,9 (even, median 2.0); grp b: 5,7,100 (odd, 7.0)
+  test("histogramSummary: exact n/min/median/max for odd and even group sizes") {
+    // grp a: values 1,2,2,9 (even, median 2.0); grp b: 5,7,100 (odd, 7.0);
+    // grp c: one value once; grp d: one value three times
     val hist = Seq(("a", 1L, 1L), ("a", 2L, 2L), ("a", 9L, 1L),
-      ("b", 5L, 1L), ("b", 7L, 1L), ("b", 100L, 1L))
+      ("b", 5L, 1L), ("b", 7L, 1L), ("b", 100L, 1L),
+      ("c", 4L, 1L), ("d", 6L, 3L))
       .toDF("g", "v", "cnt")
-    val got = Quality.histogramMedian(hist, Seq("g"))
-      .as[(String, Double)].collect().toMap
-    assert(got == Map("a" -> 2.0, "b" -> 7.0))
+    val got = Quality.histogramSummary(hist, Seq("g"))
+      .as[(String, Long, Long, Double, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
+    assert(got == Map(
+      "a" -> ((4L, 1L, 2.0, 9L)), "b" -> ((3L, 5L, 7.0, 100L)),
+      "c" -> ((1L, 4L, 4.0, 4L)), "d" -> ((3L, 6L, 6.0, 6L))))
   }
 
   test("QC medians match the naive percentile formulation on real data") {
     val ev = Tables.events(spark, sfDir)
     val filtered = Quality.filterSizeAndObservations(ev, "user_id", col("value"), 10.0, 50L)
     val hist = Quality.trackLengthHistogram(ev, filtered, "user_id")
-    val naive = ev.groupBy(col("user_id")).agg(count(lit(1)).as("len"))
-      .agg(expr("percentile(len, 0.5)")).as[Double].head()
-    val rawMed = hist.filter(col("filter_state") === "raw")
+    def naiveLenMedian(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("user_id")).agg(count(lit(1)).as("len"))
+        .agg(expr("percentile(len, 0.5)")).as[Double].head()
+    def lenMedian(state: String) = hist.filter(col("filter_state") === state)
       .select("median_len").as[Double].head()
-    assert(rawMed == naive)
+    assert(lenMedian("raw") == naiveLenMedian(ev))
+    assert(lenMedian("filtered") == naiveLenMedian(filtered))
+
+    val day = date_format(col("ts"), "yyyy-MM-dd")
+    val perFrame = Quality.cellsPerFrame(ev, col("event_type"), day)
+      .select("grp", "median_n").as[(String, Double)].collect().toMap
+    val naivePerFrame = ev.groupBy(col("event_type"), day).agg(count(lit(1)).as("n"))
+      .groupBy(col("event_type")).agg(expr("percentile(n, 0.5)"))
+      .as[(String, Double)].collect().toMap
+    assert(perFrame.nonEmpty && perFrame == naivePerFrame)
 
     val eventsXY = ev
       .withColumn("ts_s", unix_timestamp(col("ts")))
@@ -212,6 +227,23 @@ class QcMedianSpec extends SparkSpec {
       assert(!plan.contains("percentile("),
         "exact percentile() buffers every value of a group in one task:\n" +
           plan.take(1500))
+    }
+  }
+
+  test("histogram QC summaries: one window pass, no join") {
+    val ev = Tables.events(spark, sfDir)
+    Seq(
+      // a plain filter: filterSizeAndObservations would bring its own Window
+      Quality.trackLengthHistogram(ev, ev.filter(col("value") >= 10.0), "user_id"),
+      Quality.cellsPerFrame(ev, col("event_type"), date_format(col("ts"), "yyyy-MM-dd"))
+    ).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+        "the n/min/max stats and the median come from one aggregate, not a join:\n" +
+          plan.take(2000))
+      assert("""\bWindow \[""".r.findAllIn(plan).length == 1,
+        "running count and group total share one window pass:\n" + plan.take(2000))
     }
   }
 }
